@@ -270,25 +270,38 @@ object Bench {
         (line + "\n").getBytes("UTF-8"))
     }
     spark.stop()
-    parseErr.foreach { msg =>
-      System.err.println(s"BENCH FAILED: artifact JSON $msg")
-      sys.exit(3)
-    }
-    if (errors.nonEmpty) sys.exit(1)
-    // cache_build promoted from attribution to ASSERTION (r12 verdict
-    // item 5): the warm run exists to absorb shared-cache first-touch,
-    // so a clean run whose TIMED minute rebuilt a cache family means a
-    // refactor broke the warm-absorb contract — fail loudly instead of
-    // letting every future artifact quietly carry the annotation.
-    // GRAFT_BENCH_ALLOW_COLD=1 overrides for legitimately cold runs
-    // (e.g. probing first-touch cost on purpose); the artifact above is
-    // already written either way.
-    if (cacheBuilds.nonEmpty && !sys.env.contains("GRAFT_BENCH_ALLOW_COLD")) {
+    // Every failed condition is reported before the exit status is chosen,
+    // so an unparseable artifact never hides query errors (or the reverse).
+    parseErr.foreach(msg =>
+      System.err.println(s"BENCH FAILED: artifact JSON $msg"))
+    if (errors.nonEmpty)
+      System.err.println(s"BENCH FAILED: ${errors.size} query error(s): " +
+        errors.keys.mkString(", "))
+    // cache_build promoted from attribution to ASSERTION: the warm run
+    // exists to absorb shared-cache first-touch, so a clean run whose
+    // TIMED minute rebuilt a cache family means a refactor broke the
+    // warm-absorb contract — fail loudly instead of letting every future
+    // artifact quietly carry the annotation. GRAFT_BENCH_ALLOW_COLD=1
+    // overrides for legitimately cold runs (e.g. probing first-touch cost
+    // on purpose); the artifact above is already written either way.
+    val coldRebuild =
+      cacheBuilds.nonEmpty && !sys.env.contains("GRAFT_BENCH_ALLOW_COLD")
+    if (coldRebuild)
       System.err.println("BENCH FAILED: timed runs rebuilt shared " +
         s"cache families (cache_build=$cacheBuildJson) — the warm run " +
         "should have absorbed first-touch. Set GRAFT_BENCH_ALLOW_COLD=1 " +
         "only for a deliberately cold measurement.")
-      sys.exit(2)
-    }
+    val code = exitCode(errors.size, parseErr.isDefined, coldRebuild)
+    if (code != 0) sys.exit(code)
   }
+
+  /** The sweep's exit status: query errors (1) outrank an unparseable
+    * artifact (3), which outranks a timed cache rebuild (2); 0 is clean.
+    */
+  private[graft] def exitCode(queryErrors: Int, parseError: Boolean,
+      coldRebuild: Boolean): Int =
+    if (queryErrors > 0) 1
+    else if (parseError) 3
+    else if (coldRebuild) 2
+    else 0
 }

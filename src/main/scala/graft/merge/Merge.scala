@@ -6,7 +6,7 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,10 +14,14 @@ import org.apache.spark.sql.functions._
   * upsert that keeps the season dataset current:
   * season ∪_byName delta → one row per (game_id, time_remaining, quarter).
   *
-  * Scale notes: the union+dedup is a single hash shuffle on the dedup key —
-  * that is the plan shape at any scale. The tgz single-artifact packaging
-  * (S3/S5) round-trips bytes through the driver exactly like the reference;
-  * it exists for artifact parity and is the SMALL-artifact path. The scale
+  * Scale notes: every upsert is one exchange of the tagged union, chosen
+  * by the caller's output. [[mergeDeterministic]] lets the winner window
+  * hash-cluster on the keys; [[MergeTable]] hashes on its bucket column,
+  * which the window's keys clustering rides; the `.tgz` publish
+  * ([[mergeForPublish]]) gathers into one partition. The `.tgz`
+  * single-artifact packaging (S3/S5) round-trips bytes through the driver
+  * exactly like the reference and writes one file from one task; it
+  * exists for artifact parity and is the SMALL-artifact path. The scale
   * path is [[publishPartitioned]]: executors write partitioned csv.gz /
   * parquet directly, no driver bottleneck, no coalesce(1).
   */
@@ -45,25 +49,57 @@ object Merge {
     */
   def mergeDeterministic(season: DataFrame, delta: DataFrame,
       keys: Seq[String] = dedupKeys): DataFrame =
-    deterministicWinner(season, delta, keys, extraPartitionCols = Nil)
+    deterministicWinner(Some(season), delta, keys, Clustering.Keys)
 
-  /** [[mergeDeterministic]] generalized with leading extra partition
-    * columns that must each be a PURE FUNCTION of the keys (e.g.
-    * [[MergeTable]]'s `__bucket`). When present, the union is hash-
-    * repartitioned on THOSE columns and the window partitions by
-    * (extra ++ keys): the hash partitioning on `extra` — a subset of the
-    * window's cluster columns — already satisfies the window's required
-    * clustering, so Catalyst inserts NO second exchange and the winner
-    * selection rides the same single shuffle that clusters the output
-    * for the caller's partitioned write. Winner semantics are unchanged:
-    * grouping by (f(keys), keys) is grouping by keys.
+  /** The `.tgz` publish frame: [[mergeDeterministic]]'s winners over
+    * (season?, delta) on [[dedupKeys]], sorted by the keys, in ONE
+    * partition. Without a season (day-0 bootstrap) the delta alone goes
+    * through the same winner, so duplicate keys within it resolve by the
+    * same tie-break and the artifact stays byte-reproducible.
+    *
+    * Plan invariant: one exchange, into a single partition. The artifact
+    * is one file written by one task, so nothing is lost by gathering
+    * before the window instead of after it; and the window's sort
+    * (keys, `__src`, remaining columns) already orders the rows by the
+    * keys, so the publish sort is satisfied in place — no range
+    * exchange, no sampling job, no second sort. CSV parsing of both
+    * inputs stays parallel on the map side of the exchange.
     */
-  private[merge] def deterministicWinner(season: DataFrame, delta: DataFrame,
-      keys: Seq[String], extraPartitionCols: Seq[String]): DataFrame = {
-    val tagged0 = season.withColumn("__src", lit(1))
-      .unionByName(delta.withColumn("__src", lit(0)), allowMissingColumns = true)
-    val tagged = if (extraPartitionCols.isEmpty) tagged0
-      else tagged0.repartition(extraPartitionCols.map(col): _*)
+  def mergeForPublish(season: Option[DataFrame], delta: DataFrame): DataFrame =
+    deterministicWinner(season, delta, dedupKeys, Clustering.Single)
+      .orderBy(dedupKeys.map(col): _*)
+
+  /** How the tagged union is clustered for the winner window. Each choice
+    * is exactly one exchange: [[Clustering.Keys]] is the window's own;
+    * the others satisfy the window's keys clustering, so it adds none. */
+  private[merge] sealed trait Clustering
+  private[merge] object Clustering {
+    /** Let the window hash-cluster on the keys. */
+    case object Keys extends Clustering
+    /** Hash on leading columns that are each a PURE FUNCTION of the keys
+      * (e.g. [[MergeTable]]'s `__bucket`); the window partitions by
+      * (cols ++ keys), which that hashing already satisfies. */
+    final case class Leading(cols: Seq[String]) extends Clustering
+    /** Gather into one partition (the single-file publish). */
+    case object Single extends Clustering
+  }
+
+  /** The winner selection shared by every upsert. A [[Clustering.Leading]]
+    * choice lets the winner selection ride the same single shuffle that
+    * clusters the output for the caller's partitioned write. Winner
+    * semantics do not depend on the clustering: grouping by
+    * (f(keys), keys) is grouping by keys.
+    */
+  private[merge] def deterministicWinner(season: Option[DataFrame],
+      delta: DataFrame, keys: Seq[String], clustering: Clustering): DataFrame = {
+    val deltaTagged = delta.withColumn("__src", lit(0))
+    val tagged0 = season.fold(deltaTagged)(_.withColumn("__src", lit(1))
+      .unionByName(deltaTagged, allowMissingColumns = true))
+    val (tagged, extraPartitionCols) = clustering match {
+      case Clustering.Keys => (tagged0, Nil)
+      case Clustering.Leading(cols) => (tagged0.repartition(cols.map(col): _*), cols)
+      case Clustering.Single => (tagged0.repartition(1), Nil)
+    }
     // tie-break only on orderable columns — a map-typed payload column
     // would fail Window.orderBy analysis (maps are unorderable); frames
     // whose non-key columns are all unorderable degrade to __src-only
@@ -81,13 +117,22 @@ object Merge {
       .drop("__rn", "__src")
   }
 
-  /** S3: season dataset from a single `.tgz` holding one headered CSV.
-    * Driver-side gunzip+untar (skipping macOS `._*` members), then the
-    * lines are distributed and CSV-parsed on executors
-    * (spark_merge_dfs.py:53-71; utf-8 with replacement, same as its
-    * `decode('utf-8', errors='replace')`).
+  /** S3: season dataset from a single `.tgz` holding one headered CSV
+    * (spark_merge_dfs.py:53-71): driver-side gunzip+untar, then CSV
+    * parsing on executors. */
+  def readSeasonTgz(spark: SparkSession, tgzPath: String): DataFrame =
+    spark.read.option("header", "true").csv(seasonLines(spark, tgzPath))
+
+  /** The season CSV's lines, parallelized into Spark as the reference
+    * does. The one `.csv` member is untarred on the driver (skipping macOS
+    * `._*` members) and decoded as UTF-8 with replacement, same as the
+    * reference's `decode('utf-8', errors='replace')`. The lines enter as
+    * an RDD, never as a driver-side local relation: a local relation of a
+    * season's lines costs about a second to build and plan before any job
+    * runs, several times the untar itself.
     */
-  def readSeasonTgz(spark: SparkSession, tgzPath: String): DataFrame = {
+  private[graft] def seasonLines(spark: SparkSession,
+      tgzPath: String): Dataset[String] = {
     val p = new Path(tgzPath)
     val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
     val in = new TarArchiveInputStream(
@@ -107,13 +152,15 @@ object Merge {
         .getOrElse(throw new java.io.FileNotFoundException(
           s"no .csv member in $tgzPath"))
       import spark.implicits._
-      spark.read.option("header", "true").csv(spark.createDataset(lines))
+      spark.createDataset(spark.sparkContext.parallelize(lines))
     } finally in.close()
   }
 
   /** S5 small-artifact path: single CSV inside a `.tgz`
-    * (spark_merge_dfs.py:86-128). coalesce(1) narrows without a shuffle;
-    * the repack runs on the driver over the one part file.
+    * (spark_merge_dfs.py:86-128), written as one file by one task.
+    * coalesce(1) narrows without a shuffle (on [[mergeForPublish]]'s
+    * frame, already one partition, it is a no-op); the repack runs on the
+    * driver over the one part file.
     */
   def publishTgz(df: DataFrame, tmpDir: String, tgzPath: String,
       csvName: String): Unit = {

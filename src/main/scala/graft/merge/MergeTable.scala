@@ -200,8 +200,8 @@ object MergeTable {
     */
   def rewritePlan(base: DataFrame, d: DataFrame,
       keys: Seq[String]): DataFrame =
-    Merge.deterministicWinner(base, d, keys,
-      extraPartitionCols = Seq(BucketCol))
+    Merge.deterministicWinner(Some(base), d, keys,
+      Merge.Clustering.Leading(Seq(BucketCol)))
 
   /** Recover any bucket dir a crashed merge left only in `.old`. Called
     * by the WRITER (merge) only — a reader must never mutate the table,

@@ -2,8 +2,7 @@ package graft.tools
 
 import graft.ingest.Ingest
 import graft.merge.Merge
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The deployable two-stage pipeline CLI — entry-point parity with the
   * reference's two spark-submit scripts (`scripts/spark_processing.py:
@@ -104,29 +103,38 @@ object PipelineMain {
     Ingest.streamToCsv(out, req(opts, "out"), req(opts, "checkpoint"))
   }
 
-  /** Stage 2: season tgz ∪ delta CSV → [[Merge.mergeDeterministic]] →
-    * republish (spark_merge_dfs.py's job). A missing season bootstraps
-    * from the delta alone (day-0 run). Rows are sorted by the dedup keys
-    * before packaging so the artifact is byte-reproducible.
+  /** Stage 2: season tgz ∪ delta CSV → deterministic upsert → republish
+    * (spark_merge_dfs.py's job). A missing season bootstraps from the
+    * delta alone (day-0 run) through the same winner and tie-break. The
+    * artifact's rows are sorted by the dedup keys, so identical data
+    * publishes identical bytes.
+    *
+    * The written frame is [[Merge.mergeForPublish]]'s: one exchange into
+    * a single partition, whose winner-window sort is also the key sort —
+    * valid because the `.tgz` is one file written by one task.
     */
   def mergePublish(spark: SparkSession, opts: Map[String, String]): Unit = {
     val seasonTgz = req(opts, "season")
-    val deltaDir = req(opts, "delta")
     // "publish", not "out": `run` shares one opts map across both
     // stages and --out is the ingest stage's CSV delta dir
     val outTgz = opts.getOrElse("publish", seasonTgz)
     val csvName = opts.getOrElse("csv-name",
       new org.apache.hadoop.fs.Path(outTgz).getName.stripSuffix(".tgz") + ".csv")
     val tmpDir = opts.getOrElse("tmp", outTgz + ".publish-tmp")
-    val delta = Merge.readCsv(spark, deltaDir)
+    Merge.publishTgz(publishFrame(spark, seasonTgz, req(opts, "delta")),
+      tmpDir, outTgz, csvName)
+  }
+
+  /** The frame [[mergePublish]] writes: the season at `seasonTgz`, if it
+    * exists, upserted with the CSV delta at `deltaDir`. */
+  private[graft] def publishFrame(spark: SparkSession, seasonTgz: String,
+      deltaDir: String): DataFrame = {
     val seasonPath = new org.apache.hadoop.fs.Path(seasonTgz)
     val fs = seasonPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(seasonPath))
-        Merge.mergeDeterministic(Merge.readSeasonTgz(spark, seasonTgz), delta)
-      else delta.dropDuplicates(Merge.dedupKeys)
-    Merge.publishTgz(merged.orderBy(Merge.dedupKeys.map(col): _*),
-      tmpDir, outTgz, csvName)
+    val season =
+      if (fs.exists(seasonPath)) Some(Merge.readSeasonTgz(spark, seasonTgz))
+      else None
+    Merge.mergeForPublish(season, Merge.readCsv(spark, deltaDir))
   }
 
   /** Stage 3 (the engine extension beyond the reference's two jobs): the

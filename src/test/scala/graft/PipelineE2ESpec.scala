@@ -129,13 +129,13 @@ class PipelineE2ESpec extends SparkTestBase {
             .option("maxFilesPerTrigger", 1).parquet(in.toString))
           .filter(crashOn($"game_id")),
         s"$dir/$ongoing", s"$dir/$ckpt")
-    def mergePublish(ongoing: String, tgz: String): Unit = {
-      val merged = Merge.mergeDeterministic(
-        Merge.readSeasonTgz(spark, season0),
-        Merge.readCsv(spark, s"$dir/$ongoing"))
-      Merge.publishTgz(merged.orderBy(Merge.dedupKeys.map(col): _*),
-        s"$dir/t-$ongoing", s"$dir/$tgz", "shots-2025.csv")
-    }
+    // the shipped merge stage, so the byte-identity below covers the plan
+    // that runs in production
+    def mergePublish(ongoing: String, tgz: String): Unit =
+      graft.tools.PipelineMain.mergePublish(spark, Map(
+        "season" -> season0, "delta" -> s"$dir/$ongoing",
+        "publish" -> s"$dir/$tgz", "csv-name" -> "shots-2025.csv",
+        "tmp" -> s"$dir/t-$ongoing"))
     // interrupted run: batch 0 (day 1) commits, batch 1 (day 2) crashes
     assert(flag.createNewFile())
     val boom = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -261,6 +261,45 @@ class PipelineE2ESpec extends SparkTestBase {
       "--out", s"$dir/ongoing", "--checkpoint", s"$dir/ckpt",
       "--season", s"$dir/shots-2025.tgz", "--delta", s"$dir/ongoing"))
     assert(Merge.readSeasonTgz(spark, s"$dir/shots-2025.tgz").count() == 2)
+  }
+
+  test("day-0 bootstrap: duplicate delta keys publish the tie-break winner, byte-identical across shuffle widths") {
+    // no season yet: the delta alone goes through the deterministic
+    // winner. Two versions of one key sit in one delta file, the
+    // tie-break's loser first, so a keep-first dedup would publish it.
+    import graft.tools.PipelineMain
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-d0").toString
+    val hdr = "game_id,time_remaining,quarter,x,y"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "ongoing"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "ongoing", "part-0.csv"),
+      Seq(hdr, "g1,10:00.0,1,9,9", "g2,5:00.0,2,4,4", "g1,10:00.0,1,3,7")
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "ongoing", "part-1.csv"),
+      Seq(hdr, "g0,1:00.0,4,1,1").mkString("", "\n", "\n").getBytes("UTF-8"))
+    def publish(partitions: Int): Array[Byte] = {
+      val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try PipelineMain.mergePublish(spark, Map(
+          "season" -> s"$dir/absent-$partitions.tgz", "delta" -> s"$dir/ongoing",
+          "publish" -> s"$dir/p$partitions.tgz", "csv-name" -> "shots-2025.csv",
+          "tmp" -> s"$dir/t$partitions"))
+      finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
+        case None => spark.conf.unset("spark.sql.shuffle.partitions")
+      }
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, s"p$partitions.tgz"))
+    }
+    val one = publish(1)
+    assert(one.sameElements(publish(8)),
+      "day-0 artifact must not depend on spark.sql.shuffle.partitions")
+    val back = Merge.readSeasonTgz(spark, s"$dir/p1.tgz")
+    assert(back.count() == 3)
+    // within one source the non-key columns in name order break the tie:
+    // (x, y) = (3, 7) sorts before (9, 9)
+    assert(back.filter($"game_id" === "g1").select("x", "y").as[(String, String)]
+      .collect().toSeq == Seq(("3", "7")))
+    // published rows are sorted by the dedup keys
+    assert(back.select("game_id").as[String].collect().toSeq == Seq("g0", "g1", "g2"))
   }
 
   test("streaming flavor: envelope file stream -> transform -> csv sink") {

@@ -435,6 +435,57 @@ class PlanShapeSpec extends SparkTestBase {
         "shuffle), not below it")
   }
 
+  test("PipelineMain merge-publish: ONE single-partition exchange, and " +
+      "the winner window's sort is the publish's key sort") {
+    // The `.tgz` artifact is one file written by one task, so the upsert
+    // gathers the tagged season ∪ delta into one partition once; the
+    // winner window's sort (keys, __src, remaining columns) then already
+    // orders the rows by the keys and RemoveRedundantSorts drops the
+    // publish's global sort. A regression brings back the window's hash
+    // exchange or the range exchange (plus its sampling job) that the
+    // publish sort needs — every artifact byte stays the same, so only
+    // this gate sees it.
+    import spark.implicits._
+    import graft.merge.Merge
+    import graft.tools.PipelineMain
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-pub").toString
+    val cols = Seq("game_id", "time_remaining", "quarter", "x", "y")
+    Merge.publishTgz(Seq(("g1", "10:00.0", "1", "1", "2"), ("g2", "5:00.0", "2", "3", "4"))
+      .toDF(cols: _*), s"$dir/t0", s"$dir/season.tgz", "season.csv")
+    Seq(("g1", "10:00.0", "1", "5", "6"), ("g3", "1:00.0", "4", "7", "8"))
+      .toDF(cols: _*).write.option("header", "true").csv(s"$dir/ongoing")
+    // csv(Dataset[String]) always yields an RDD scan, so the relation the
+    // lines enter through is checked on the lines themselves
+    assert(Merge.seasonLines(spark, s"$dir/season.tgz").queryExecution.analyzed
+        .collectFirst { case l: LocalRelation => l }.isEmpty,
+      "season lines entered as a driver-side LocalRelation")
+    assert(Merge.readSeasonTgz(spark, s"$dir/season.tgz").queryExecution.analyzed
+      .collectFirst { case l: LocalRelation => l }.isEmpty)
+    val frame = PipelineMain.publishFrame(spark, s"$dir/season.tgz", s"$dir/ongoing")
+    def check(nodes: Seq[SparkPlan], when: String): Unit = {
+      val ex = nodes.collect { case e: ShuffleExchangeExec => e }
+      assert(ex.size == 1 && ex.head.outputPartitioning == SinglePartition,
+        s"$when: merge-publish must exchange exactly once, into one " +
+          s"partition; got ${ex.map(_.outputPartitioning)}")
+      assert(!nodes.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+        s"$when: a range exchange for the publish sort came back")
+      val sorts = nodes.collect { case s: SortExec => s }
+      val windows = nodes.collect { case w: WindowExec => w }
+      assert(sorts.size == 1 && !sorts.head.global,
+        s"$when: expected exactly one (the window's) sort, got " +
+          sorts.map(s => s"global=${s.global}"))
+      assert(windows.size == 1 && collectAll(windows.head.child).contains(sorts.head),
+        s"$when: the lone sort must feed the winner window")
+    }
+    check(collectAll(frame.queryExecution.executedPlan), "planned")
+    val rows = frame.collect()
+    check(collectAll(frame.queryExecution.executedPlan), "executed")
+    assert(rows.map(_.getString(0)).toSeq == Seq("g1", "g2", "g3"))
+    assert(rows.head.getString(3) == "5", "delta must beat season")
+  }
+
   test("full-surface join/window/sort audit: no cartesian, no " +
       "unpartitioned window, no interior global sort, every " +
       "nested-loop join has a bounded build side") {
