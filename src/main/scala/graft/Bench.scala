@@ -1,22 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Local-harness scan parallelism: testdata tables are single
-      // parquet files well under the default 128m split size, which
-      // serializes the scan on one core. 16m splits let local[32] use
-      // its cores; a real cluster keeps the 128m default.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 16m splits let local[32] use its cores on the single-file tables
+    val spark = Sessions.local(4, maxPartitionBytes = Some("16m"))
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     val names = SparkEntry.queries.keys.toSeq.sorted
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // The timed action is a noop-sink WRITE, not count(): under a count

@@ -28,16 +28,20 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** events.parquet carries TIMESTAMP(NANOS) which Spark's parquet reader
-    * rejects (PARQUET_TYPE_ILLEGAL). Read nanos as long
-    * (spark.sql.legacy.parquet.nanosAsLong) and truncate to a microsecond
-    * timestamp — the same value DuckDB produces for `CAST(ts AS TIMESTAMP)`
-    * on the nanosecond column.
+  /** The reader setting events.parquet needs: Spark's parquet reader
+    * rejects its TIMESTAMP(NANOS) column (PARQUET_TYPE_ILLEGAL) unless it
+    * reads nanos as long. */
+  val NanosAsLong: (String, String) =
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+
+  /** events.parquet, read on a session derived with [[NanosAsLong]] (the
+    * caller's session is never written; the frame carries the setting)
+    * and truncated to a microsecond timestamp — the same value DuckDB
+    * produces for `CAST(ts AS TIMESTAMP)` on the nanosecond column.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
-  }
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeEventTs(Sessions.scoped(spark, NanosAsLong)
+      .read.parquet(s"$dir/events.parquet"))
 
   /** Branch on what the parquet reader produced for `ts`: NANOS columns
     * surface as long (convert by truncation, same as DuckDB's ns→µs cast);

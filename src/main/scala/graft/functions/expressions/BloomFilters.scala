@@ -1,9 +1,9 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, SessionBridge}
 import org.apache.spark.sql.types.BinaryType
 
 /** Column builders over Spark's OWN bloom-filter expressions — the
@@ -28,89 +28,27 @@ object BloomFilters {
     * and `...maxNumBits` (default 67108864 = 8 MB). Past the clamp the
     * filter is undersized — results stay correct (a downstream exact
     * join removes false positives; false negatives cannot occur) but
-    * the FP rate degrades and the prescreen stops pruning. Callers
-    * sizing for more than the defaults must raise both confs first:
-    * [[withCapacity]] does exactly that, scoped.
+    * the FP rate degrades and the prescreen stops pruning.
     *
-    * ISOLATION: the caps are session-level SQL confs read from the
-    * session that OWNS the build's Dataset when its aggregate executes,
-    * so a cloned `newSession` would not reach a build whose (possibly
-    * cached) frame is bound to the original session — the mutation has
-    * to happen on that session. Concurrency model (reworked per ADVICE
-    * r12 — the old form held one JVM-global lock across the whole Spark
-    * action, serializing every build in the JVM and inviting deadlock
-    * if a body ever blocked on another thread needing the lock):
-    * set/restore happens under a brief lock, the ACTION runs outside
-    * any lock, and overlapping windows on one session REF-COUNT a
-    * ratcheted cap — each entry raises the session's caps to the max
-    * requested so far, and the last window out restores the caller's
-    * original values. Raising a cap mid-window is benign by the same
-    * argument as always: caps only limit a capacity a build itself
-    * requests, so a concurrent query (including Spark's own
-    * `InjectRuntimeFilter`) at most builds a filter as large as it
-    * asked to be — never smaller, never corrupt.
+    * [[build]] returns a serialized filter over `c` of `df`, sized by
+    * `expectedItems` and `numBits` with the clamp lifted. The aggregate
+    * reads the caps from the session that owns the frame it runs in, so
+    * the build runs on `df` rebound to a session derived with caps
+    * raised to the request ([[graft.Sessions.scoped]]); a persisted `df`
+    * is still read from its cache, which the sessions share. The
+    * caller's session is never written: a concurrent query in it, Spark's
+    * own `InjectRuntimeFilter` included, keeps the caller's caps.
     */
-  private final class CapState(val prevItems: Option[String],
-      val prevBits: Option[String]) {
-    var depth = 0
-    var items = 0L
-    var bits = 0L
-    // Last value THIS machinery wrote per key — restore compares against
-    // it so an external writer's mid-window change is never clobbered by
-    // the stale first-entry snapshot (ADVICE r13).
-    var setItems: String = null
-    var setBits: String = null
-  }
-  private val capStates = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, CapState]
-  private val stateLock = new Object
-
-  def withCapacity[A](spark: org.apache.spark.sql.SparkSession,
-      expectedItems: Long, numBits: Long)(body: => A): A = {
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    stateLock.synchronized {
-      val st = capStates.computeIfAbsent(spark, _ =>
-        new CapState(spark.conf.getOption(itemsKey),
-          spark.conf.getOption(bitsKey)))
-      st.depth += 1
-      st.items = math.max(st.items, math.max(expectedItems, 4000000L))
-      st.bits = math.max(st.bits, math.max(numBits, 67108864L))
-      st.setItems = st.items.toString
-      st.setBits = st.bits.toString
-      spark.conf.set(itemsKey, st.setItems)
-      spark.conf.set(bitsKey, st.setBits)
-    }
-    // Restore ONLY if the conf still holds the value this machinery last
-    // set: an external writer (user code, another framework) changing the
-    // cap mid-window must win over our stale first-entry snapshot —
-    // last-writer-wins for THEM, not for us (ADVICE r13).
-    //
-    // Residual TOCTOU, accepted (ADVICE r14): the getOption→set pair is
-    // not atomic (RuntimeConfig has no compare-and-set), so an external
-    // write landing INSIDE that window is still clobbered, and an
-    // external writer that sets exactly the value this machinery last
-    // set is indistinguishable from our own write and gets restored
-    // over. Both need an adversarially-timed external mutation of a
-    // Spark-internal optimizer cap on a session we're mid-query on —
-    // the guard is best-effort conf hygiene, not a concurrency
-    // guarantee, and the worst outcome is a WIDER bloom cap than the
-    // external writer asked for (never a corrupt filter).
-    def restore(key: String, prev: Option[String], lastSet: String): Unit =
-      if (spark.conf.getOption(key).contains(lastSet)) prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    try body
-    finally stateLock.synchronized {
-      val st = capStates.get(spark)
-      st.depth -= 1
-      if (st.depth == 0) {
-        capStates.remove(spark)
-        restore(itemsKey, st.prevItems, st.setItems)
-        restore(bitsKey, st.prevBits, st.setBits)
-      }
-    }
+  def build(df: DataFrame, c: Column, expectedItems: Long,
+      numBits: Long): Array[Byte] = {
+    val lifted = graft.Sessions.scoped(df.sparkSession,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" ->
+        math.max(expectedItems, 4000000L).toString,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" ->
+        math.max(numBits, 67108864L).toString)
+    SessionBridge.rebind(df, lifted)
+      .agg(bloomAgg(c, expectedItems, numBits).as("bf"))
+      .head().getAs[Array[Byte]](0)
   }
 
   /** Aggregate a column into a serialized bloom filter (binary).
@@ -118,9 +56,8 @@ object BloomFilters {
     * `bloom_filter_agg`'s arguments; ~10 bits/item ≈ 1% FP rate.
     * Distributed build: partial filters merge associatively, the driver
     * receives only the final `numBits`-sized array. Sizes beyond the
-    * runtime-filter conf caps are silently clamped — wrap the BUILD in
-    * [[withCapacity]] when `expectedItems` can exceed 4M (the confs are
-    * read when the aggregate executes, so scoping the action suffices).
+    * runtime-filter conf caps are silently clamped — use [[build]] when
+    * `expectedItems` can exceed 4M.
     */
   def bloomAgg(c: Column, expectedItems: Long, numBits: Long): Column =
     ColumnBridge.column(new BloomFilterAggregate(

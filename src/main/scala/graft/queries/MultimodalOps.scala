@@ -6,6 +6,7 @@ import graft.functions.expressions.LongDotProduct.longDot
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Oracle-checked queries for the multimodal plumbing and embedding
   * near-duplicate detection (north star).
@@ -317,36 +318,37 @@ object MultimodalOps {
     */
   def quarantineLoop(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Scope shuffle partitions to 8 for the loop, like the streaming
-    // drains do (StreamingQueries.withDrainPartitions): the loop is a
-    // chain of ~15 small sequential jobs (stages, merges, snapshots)
+    // The loop runs on a session derived with the drains' tuning
+    // (StreamingQueries.DrainConf: 8 shuffle partitions, AQE off): it is
+    // a chain of ~15 small sequential jobs (stages, merges, snapshots)
     // whose per-partition constants dominate at bench scale; a
-    // deployment sizes the conf to its data instead.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // AQE off for the loop's bounded merge jobs, same rationale and
-    // measurement as StreamingQueries.withDrainPartitions
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // deployment sizes the conf to its data instead. Only the returned
+    // frame is built on the caller's session.
+    val tuned = graft.Sessions.scoped(spark, StreamingQueries.DrainConf: _*)
     val base = java.nio.file.Files.createTempDirectory("graft-q91-").toString
     try {
       val mainT = s"$base/media_meta"
       val quarT = s"$base/quarantine"
       val nB = 16
+      // the corpus comes from the caller's blob cache (shared with
+      // q90/q92/q93, so it is generated once), rebound to the tuned session
+      val blobs = SessionBridge.rebind(
+        Multimodal.documentBlobs(spark, dir).toDF(), tuned)
+        .as[Multimodal.MediaRow]
       // lazy decode plans go straight into the route — the route's own
       // normalization stage is the single materialization (one staging
       // pair per cycle, not two; the codec pass still executes once)
-      val corrupted = Multimodal.documentBlobs(spark, dir).map { r =>
+      val corrupted = blobs.map { r =>
         if (r.media_id % 7 == 0) r.copy(content = r.content.take(5)) else r
       }
       Multimodal.quarantineRoute(Multimodal.decodeMetaTotal(corrupted).toDF(),
         mainT, quarT, nB, s"$base/scratch1", seq = 1L)
-      val snap1 = quarantineSnapshot(spark, mainT, quarT, 1)
+      val snap1 = quarantineSnapshot(tuned, mainT, quarT, 1)
       val schema = snap1.schema
       val s1 = snap1.collect()
-      val quarKeys = graft.merge.MergeTable.read(spark, quarT)
+      val quarKeys = graft.merge.MergeTable.read(tuned, quarT)
         .filter(col("status") === lit("quarantined")).select("media_id")
-      val repaired = Multimodal.documentBlobs(spark, dir).toDF()
+      val repaired = blobs.toDF()
         .join(quarKeys, Seq("media_id"), "left_semi")
         .as[Multimodal.MediaRow]
       // `repaired` lazily reads the quarantine table (quarKeys), which
@@ -355,13 +357,11 @@ object MultimodalOps {
       // discipline holds
       Multimodal.quarantineRoute(Multimodal.decodeMetaTotal(repaired).toDF(),
         mainT, quarT, nB, s"$base/scratch2", seq = 2L)
-      val s2 = quarantineSnapshot(spark, mainT, quarT, 2).collect()
+      val s2 = quarantineSnapshot(tuned, mainT, quarT, 2).collect()
       import scala.jdk.CollectionConverters._
       spark.createDataFrame((s1 ++ s2).toSeq.asJava, schema)
         .orderBy(col("cycle"), col("media_type"))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       scala.util.Try(org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(base)))
     }

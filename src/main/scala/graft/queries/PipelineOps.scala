@@ -282,8 +282,8 @@ object PipelineOps {
     * false negatives cannot occur, so the result — and the oracle — are
     * IDENTICAL to q41's. ~10 bits/shingle ≈ 1% FP; the filter rides the
     * plan as a literal, the same materialized-scalar shape Spark's own
-    * `InjectRuntimeFilter` produces. The build is wrapped in
-    * [[graft.functions.expressions.BloomFilters.withCapacity]]: past the
+    * `InjectRuntimeFilter` produces. The build goes through
+    * [[graft.functions.expressions.BloomFilters.build]]: past the
     * runtime-filter conf caps (4M items / 64M bits) the aggregate
     * silently clamps and the ~1%-FP claim stops holding — see the
     * clamp note on [[graft.functions.expressions.BloomFilters]].
@@ -305,14 +305,11 @@ object PipelineOps {
     // (doc_id, sh) rows, so numBits isn't overestimated.
     val nBench = math.max(bench.select(col("sh")).distinct().count(), 1L)
     val numBits = math.max(nBench * 10L, 8192L)
-    // withCapacity: BloomFilterAggregate clamps at the runtime-filter
-    // confs (4M items / 64M bits default) — beyond ~4M shingles an
-    // unscoped build silently degrades to >1% FP and the prescreen
-    // stops pruning (results stay correct via the exact join).
-    val bloom = BloomFilters.withCapacity(spark, nBench, numBits) {
-      bench.agg(BloomFilters.bloomAgg(col("sh"), nBench, numBits)
-        .as("bf")).head().getAs[Array[Byte]](0)
-    }
+    // BloomFilters.build lifts the runtime-filter caps (4M items / 64M
+    // bits default) on a derived session — beyond ~4M shingles a plain
+    // build silently degrades to >1% FP and the prescreen stops pruning
+    // (results stay correct via the exact join).
+    val bloom = BloomFilters.build(bench, col("sh"), nBench, numBits)
     contamShingled(docs.filter(col("doc_id") % 50 =!= 0))
       .filter(BloomFilters.mightContain(bloom, col("sh")))
       .join(bench, Seq("sh"))

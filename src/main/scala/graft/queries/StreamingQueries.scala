@@ -33,58 +33,62 @@ object StreamingQueries {
     q + "_" + java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
 
-  /** Scope `spark.sql.shuffle.partitions` to 8 around a drain. The
-    * stateful agg creates one state-store instance per shuffle partition,
-    * each with its own checkpoint dir, snapshot and commit files — at
-    * local bench scale that per-partition constant dominates the drain
-    * (measured 2.7 s → 1.3 s on q79). 8 partitions is still a
-    * distributed plan (state scales out by repartitioning the checkpoint
-    * at deployment); the conf is captured at stream START, so scoping it
-    * around start() is safe, and it is restored before any other query
-    * plans.
+  private def drainBase(q: String, dir: String): String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft-drain-" + drainName(q, dir)).toString
+
+  /** The drains' tuning, as keys for [[graft.Sessions.scoped]]: 8 shuffle
+    * partitions and AQE off. The stateful agg creates one state-store
+    * instance per shuffle partition, each with its own checkpoint dir,
+    * snapshot and commit files; at local bench scale that per-partition
+    * constant dominates the drain (measured 2.7 s → 1.3 s on q79). 8
+    * partitions is still a distributed plan (state scales out by
+    * repartitioning the checkpoint at deployment). AQE is off for the
+    * drain's foreachBatch jobs too (streaming plans disable it
+    * themselves): every per-batch job is a BOUNDED merge/stage over one
+    * micro-batch, where AQE's per-stage re-planning is pure latency
+    * (measured 9.5 → 7.6 s on the q93 shape, tools/DrainProbe) and its
+    * payoffs (skew joins, coalescing huge shuffles) cannot apply.
+    *
+    * Every drain builds its stream from a session derived with these
+    * keys, never by setting them on the caller's: a stream keeps the
+    * conf of the session that starts it, and a query planning in the
+    * caller's session meanwhile sees the caller's own settings.
+    * Deployment code (PipelineMain) uses its session's conf unchanged.
     */
-  private def withDrainPartitions[A](spark: SparkSession)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // AQE off for the drain's foreachBatch jobs too (streaming plans
-    // disable it themselves): every per-batch job here is a BOUNDED
-    // merge/stage over one micro-batch, where AQE's per-stage
-    // re-planning is pure latency (~0.2 s × jobs × batches — measured
-    // 9.5 → 7.6 s on the q93 shape, tools/DrainProbe, BUILD_NOTES R16)
-    // and its payoffs (skew joins, coalescing huge shuffles) cannot
-    // apply. Deployment code (PipelineMain) inherits the session conf
-    // unchanged.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+  val DrainConf: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.enabled" -> "false")
+
+  /** Drain the stream `build` makes on a session derived from `spark`
+    * with `conf` into `q`'s file sink, and read the output back on
+    * `spark`, so the returned frame plans under the caller's settings. */
+  private def drained(spark: SparkSession, q: String, dir: String,
+      conf: Seq[(String, String)] = DrainConf)
+      (build: SparkSession => DataFrame): DataFrame = {
+    val base = drainBase(q, dir)
+    Streaming.drainToFile(build(graft.Sessions.scoped(spark, conf: _*)),
+      s"$base/out", s"$base/cp", spark)
   }
 
   /** q79: hourly event-type rollup computed BY THE STREAMING ENGINE.
     * Append output mode through a parquet file sink, like q80/q83/q84:
     * each window emits exactly once when the watermark passes its end
-    * and its state evicts (complete mode — the pre-round-10 shape —
-    * would re-materialize every window on the driver each drain and
-    * retain all window state). The closing sentinel pushes the bounded
-    * AvailableNow drain's final watermark past every real window, so
-    * append mode still yields exactly the batch q18 result; the
+    * and its state evicts (complete mode would re-materialize every
+    * window on the driver each drain and retain all window state). The
+    * closing sentinel pushes the bounded AvailableNow drain's final
+    * watermark past every real window, so append mode still yields
+    * exactly the batch q18 result; the
     * sentinel's own "__sentinel" windows end past the watermark, stay
     * unemitted, and are filtered on the drained output besides.
     */
-  def streamedHourlyRollup(spark: SparkSession, dir: String): DataFrame = {
-    val rolled = Streaming.windowedRollup(
-      Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3))
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q79", dir)).toString
-    withDrainPartitions(spark) {
-      Streaming.drainToFile(rolled, s"$base/out", s"$base/cp")
-        .filter(col("event_type") =!= lit("__sentinel"))
-        .orderBy(col("hour"), col("event_type"))
+  def streamedHourlyRollup(spark: SparkSession, dir: String): DataFrame =
+    drained(spark, "q79", dir) { s =>
+      Streaming.windowedRollup(
+        Streaming.fileEventSource(s, dir, sentinelHorizonHours = 3))
     }
-  }
+      .filter(col("event_type") =!= lit("__sentinel"))
+      .orderBy(col("hour"), col("event_type"))
 
   /** Same statement as q18's oracle — the two entries must never drift,
     * so the SQL is shared, not copied. */
@@ -95,10 +99,10 @@ object StreamingQueries {
     * merging-session store (`session_window` sessions grow and MERGE as
     * micro-batches arrive, a different state-store code path).
     *
-    * APPEND output mode through a parquet FILE sink (round-9 verdict:
-    * the previous complete-mode memory-sink drain materialized every
-    * merged session on the driver and retained all session state
-    * forever — unbounded with users×activity). Append mode emits a
+    * APPEND output mode through a parquet FILE sink (a complete-mode
+    * memory-sink drain would materialize every merged session on the
+    * driver and retain all session state forever — unbounded with
+    * users×activity). Append mode emits a
     * session exactly once, when the watermark passes its end, and the
     * state store evicts it — state is bounded by the watermark, the
     * sink writes from executors, the driver holds nothing. The closing
@@ -119,14 +123,12 @@ object StreamingQueries {
     * spacing — but SessionBoundaryPropertySpec's boundary-adversarial
     * generator distinguishes the two and pins the merge behavior.)
     */
-  def streamedSessionRollup(spark: SparkSession, dir: String): DataFrame = {
-    val rolled = Streaming.sessionWindowRollup(
-      Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3),
+  def streamedSessionRollup(spark: SparkSession, dir: String): DataFrame =
+    drained(spark, "q80", dir) { s =>
+      Streaming.sessionWindowRollup(
+        Streaming.fileEventSource(s, dir, sentinelHorizonHours = 3),
         gap = "30 minutes")
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q80", dir)).toString
-    withDrainPartitions(spark) {
+    }
       // The sentinel filter runs on the drained BATCH output, not inside
       // the stream: a pre-sink filter on the grouping key is pushed down
       // below the watermark node by Catalyst, which would exclude the
@@ -135,15 +137,12 @@ object StreamingQueries {
       // withheld). Post-drain it is purely defensive anyway — the
       // sentinel's own session ends past the final watermark and is
       // never emitted.
-      Streaming.drainToFile(rolled, s"$base/out", s"$base/cp")
-        .filter(col("user_id") =!= lit(Streaming.SentinelUserId))
-        .select(col("user_id"),
-          unix_micros(col("start")).as("start_us"),
-          unix_micros(col("end")).as("session_end_us"),
-          col("n_events"), col("total_value"))
-        .orderBy(col("user_id"), col("start_us"))
-    }
-  }
+      .filter(col("user_id") =!= lit(Streaming.SentinelUserId))
+      .select(col("user_id"),
+        unix_micros(col("start")).as("start_us"),
+        unix_micros(col("end")).as("session_end_us"),
+        col("n_events"), col("total_value"))
+      .orderBy(col("user_id"), col("start_us"))
 
   /** q83: the CUSTOM-STATE session path (flatMapGroupsWithState +
     * event-time timeout) under the oracle gate — q80 gates the built-in
@@ -161,21 +160,22 @@ object StreamingQueries {
     * session_window reports end + gap) and the value summed exactly
     * (state accumulates cents — see [[Streaming.SessionState]]).
     */
-  def streamedStatefulSessions(spark: SparkSession, dir: String): DataFrame = {
+  def streamedStatefulSessions(spark: SparkSession, dir: String): DataFrame =
+    drained(spark, "q83", dir) { s =>
+      Streaming.statefulSessionize(sentinelEvents(s, dir)).toDF()
+    }
+      .filter(col("user_id") =!= lit(Streaming.SentinelUserId))
+      .orderBy(col("user_id"), col("start_us"))
+
+  /** The sentinel-closed events stream as typed [[Streaming.Event]]s, the
+    * input of both session state APIs (q83, q89). */
+  private def sentinelEvents(spark: SparkSession, dir: String)
+      : org.apache.spark.sql.Dataset[Streaming.Event] = {
     import spark.implicits._
-    val src = Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3)
+    Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
       .as[Streaming.Event]
-    val sess = Streaming.statefulSessionize(src).toDF()
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q83", dir)).toString
-    withDrainPartitions(spark) {
-      Streaming.drainToFile(sess, s"$base/out", s"$base/cp")
-        .filter(col("user_id") =!= lit(Streaming.SentinelUserId))
-        .orderBy(col("user_id"), col("start_us"))
-    }
   }
 
   val streamedStatefulSessionsSql: String =
@@ -203,30 +203,19 @@ object StreamingQueries {
     * (Spark 4's successor to flatMapGroupsWithState: named state
     * variables, explicit event-time timers — [[Streaming
     * .SessionProcessor]]), drained under the RocksDB state store the API
-    * requires ([[Streaming.withRocksDBState]]). Identical oracle to q83
+    * requires ([[Streaming.RocksDBConf]], added to [[DrainConf]] on the
+    * drain's derived session). Identical oracle to q83
     * — the two state APIs must produce the same sessions — so a green
     * row here gates the NEW state API end-to-end: named ValueState,
     * timer registration/expiry, append emission, RocksDB changelog
     * checkpointing.
     */
-  def streamedTwsSessions(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val src = Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .as[Streaming.Event]
-    val sess = Streaming.twsSessionize(src).toDF()
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q89", dir)).toString
-    withDrainPartitions(spark) {
-      Streaming.withRocksDBState(spark) {
-        Streaming.drainToFile(sess, s"$base/out", s"$base/cp")
-      }
-        .filter(col("user_id") =!= lit(Streaming.SentinelUserId))
-        .orderBy(col("user_id"), col("start_us"))
+  def streamedTwsSessions(spark: SparkSession, dir: String): DataFrame =
+    drained(spark, "q89", dir, DrainConf ++ Streaming.RocksDBConf) { s =>
+      Streaming.twsSessionize(sentinelEvents(s, dir)).toDF()
     }
-  }
+      .filter(col("user_id") =!= lit(Streaming.SentinelUserId))
+      .orderBy(col("user_id"), col("start_us"))
 
   /** q84: the SLIDING-window streaming aggregate under the oracle gate —
     * q79 gates slide == window (tumbling); this gates slide < window
@@ -238,21 +227,16 @@ object StreamingQueries {
     * "__sentinel" windows end past the watermark, stay in state, and
     * are filtered on the drained output besides.
     */
-  def streamedSlidingRollup(spark: SparkSession, dir: String): DataFrame = {
-    val rolled = Streaming.windowedRollup(
-      Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3),
-      slide = "15 minutes")
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q84", dir)).toString
-    withDrainPartitions(spark) {
-      Streaming.drainToFile(rolled, s"$base/out", s"$base/cp")
-        .filter(col("event_type") =!= lit("__sentinel"))
-        .select(unix_micros(col("hour")).as("window_start_us"),
-          col("event_type"), col("n"), col("total_value"))
-        .orderBy(col("window_start_us"), col("event_type"))
+  def streamedSlidingRollup(spark: SparkSession, dir: String): DataFrame =
+    drained(spark, "q84", dir) { s =>
+      Streaming.windowedRollup(
+        Streaming.fileEventSource(s, dir, sentinelHorizonHours = 3),
+        slide = "15 minutes")
     }
-  }
+      .filter(col("event_type") =!= lit("__sentinel"))
+      .select(unix_micros(col("hour")).as("window_start_us"),
+        col("event_type"), col("n"), col("total_value"))
+      .orderBy(col("window_start_us"), col("event_type"))
 
   /** Same statement as q49's oracle — shared, not copied. */
   val streamedSlidingRollupSql: String = EventOps.slidingRollupSql
@@ -291,19 +275,13 @@ object StreamingQueries {
     * bounded drain emits the complete matched set, which the oracle
     * states as the equivalent batch self-join.
     */
-  def streamedIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val joined = Streaming.errorContextJoin(
-      Streaming.fileEventSource(spark, dir))
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q85", dir)).toString
-    withDrainPartitions(spark) {
-      Streaming.drainToFile(joined, s"$base/out", s"$base/cp")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("c_ts")).as("ctx_us"), col("value"))
-        .orderBy(col("event_id"), col("ctx_us"), col("value"))
+  def streamedIntervalJoin(spark: SparkSession, dir: String): DataFrame =
+    drained(spark, "q85", dir) { s =>
+      Streaming.errorContextJoin(Streaming.fileEventSource(s, dir))
     }
-  }
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("c_ts")).as("ctx_us"), col("value"))
+      .orderBy(col("event_id"), col("ctx_us"), col("value"))
 
   val streamedIntervalJoinSql: String =
     """WITH ev AS (
@@ -329,19 +307,14 @@ object StreamingQueries {
     * long a key's fingerprint is retained), so no closing sentinel is
     * needed.
     */
-  def streamedDedup(spark: SparkSession, dir: String): DataFrame = {
-    val deduped = Streaming.dedupWithinWatermark(
-      Streaming.fileEventSourceDuplicated(spark, dir), Seq("event_id"))
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q86", dir)).toString
-    withDrainPartitions(spark) {
-      Streaming.drainToFile(deduped, s"$base/out", s"$base/cp")
-        .select(col("event_id"), unix_micros(col("ts")).as("us"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        .orderBy(col("event_id"))
+  def streamedDedup(spark: SparkSession, dir: String): DataFrame =
+    drained(spark, "q86", dir) { s =>
+      Streaming.dedupWithinWatermark(
+        Streaming.fileEventSourceDuplicated(s, dir), Seq("event_id"))
     }
-  }
+      .select(col("event_id"), unix_micros(col("ts")).as("us"),
+        col("user_id"), col("event_type"), col("value"), col("props"))
+      .orderBy(col("event_id"))
 
   val streamedDedupSql: String =
     """SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
@@ -384,7 +357,7 @@ object StreamingQueries {
   // dir -> (fixture fingerprint, template path): keying by DIR (with the
   // fingerprint as the entry's validity stamp, not part of the key) lets
   // a fixture rewrite DELETE the superseded template instead of leaking
-  // one tmpdir tree per rewrite for the JVM's lifetime (ADVICE r12)
+  // one tmpdir tree per rewrite for the JVM's lifetime
   private[graft] val q87SeedTemplates =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private val q87SweptDeadPids = new java.util.concurrent.atomic.AtomicBoolean
@@ -570,9 +543,7 @@ object StreamingQueries {
   }
 
   def streamedUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q87", dir)).toString
+    val base = drainBase("q87", dir)
     // fresh season + checkpoint: each call is a full recomputation, and
     // a leftover checkpoint would make the new drain a no-op resume
     Streaming.rmr(base)
@@ -581,20 +552,19 @@ object StreamingQueries {
     // q87SeedTemplate's own synchronized block): a supersede-delete in
     // another thread (fixture rewritten between our template lookup and
     // the copy) would otherwise rmr the template tree mid-copyTree and
-    // corrupt this season (ADVICE r13). The copy is local-FS file I/O of
+    // corrupt this season. The copy is local-FS file I/O of
     // a sf-bounded seed — holding the coarse lock for it costs nothing
     // under the sequential-driver contract and makes the race structural
     // rather than informally excluded.
     q87SeedLock.synchronized {
       copyTree(q87SeedTemplate(spark, dir), season)
     }
-    val delta = Streaming.fileEventSource(spark, dir)
+    val delta = Streaming.fileEventSource(
+        graft.Sessions.scoped(spark, DrainConf: _*), dir)
       .select(col("event_id"), unix_micros(col("ts")).as("us"),
         col("user_id"), col("event_type"), col("value"))
-    withDrainPartitions(spark) {
-      Streaming.upsertSink(delta, season, s"$base/cp",
-        keys = Seq("event_id"), nBuckets = 16)
-    }
+    Streaming.upsertSink(delta, season, s"$base/cp",
+      keys = Seq("event_id"), nBuckets = 16)
     graft.merge.MergeTable.read(spark, season).orderBy(col("event_id"))
   }
 
@@ -635,9 +605,7 @@ object StreamingQueries {
     */
   def streamedQuarantine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q92", dir)).toString
+    val base = drainBase("q92", dir)
     Streaming.rmr(base)
     val mainT = s"$base/media_meta"
     val quarT = s"$base/quarantine"
@@ -652,26 +620,24 @@ object StreamingQueries {
         .write.parquet(tpl)
     }
     val schema = blobSrcSchema(spark, tpl)
-    val stream = spark.readStream.schema(schema)
+    graft.Sessions.scoped(spark, DrainConf: _*).readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // lazy decode straight into the route: its single
-          // materialization is the route's normalization stage (one
-          // staging pair per batch, not two — the codec pass still
-          // executes exactly once)
-          graft.multimodal.Multimodal.quarantineRoute(
-            graft.multimodal.Multimodal.decodeMetaTotal(
-              batch.as[graft.multimodal.Multimodal.MediaRow]).toDF(),
-            mainT, quarT, nBuckets = 16,
-            scratch = s"$base/scratch", seq = batchId)
-        }
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // lazy decode straight into the route: its single
+        // materialization is the route's normalization stage (one
+        // staging pair per batch, not two — the codec pass still
+        // executes exactly once)
+        graft.multimodal.Multimodal.quarantineRoute(
+          graft.multimodal.Multimodal.decodeMetaTotal(
+            batch.as[graft.multimodal.Multimodal.MediaRow]).toDF(),
+          mainT, quarT, nBuckets = 16,
+          scratch = s"$base/scratch", seq = batchId)
+      }
+      .option("checkpointLocation", s"$base/cp")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
     MultimodalOps.quarantineSnapshot(spark, mainT, quarT, 1)
       .drop("cycle").orderBy(col("media_type"))
   }
@@ -735,9 +701,7 @@ object StreamingQueries {
     */
   def streamedRepair(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q93", dir)).toString
+    val base = drainBase("q93", dir)
     Streaming.rmr(base)
     val mainT = s"$base/media_meta"
     val quarT = s"$base/quarantine"
@@ -752,8 +716,8 @@ object StreamingQueries {
         .write.parquet(tpl)
     }
     val schema = blobSrcSchema(spark, tpl)
-    def drain(): Unit = withDrainPartitions(spark) {
-      val q = spark.readStream.schema(schema)
+    def drain(): Unit =
+      graft.Sessions.scoped(spark, DrainConf: _*).readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -768,8 +732,7 @@ object StreamingQueries {
         .option("checkpointLocation", s"$base/cp")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    }
+        .awaitTermination()
     drain() // corruption wave: batches 0–2
     // the repair wave arrives AFTER the first drain stopped — copied in
     // as new files (the repair template's part names never collide with

@@ -63,74 +63,90 @@ object Streaming {
     */
   def fileEventSource(spark: SparkSession, dir: String,
       sentinelHorizonHours: Int): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The file stream source needs a directory; stage the single-file
-    // fixture into one (testdata is read-only).
+    val s = graft.Sessions.scoped(spark, graft.Tables.NanosAsLong)
+    val (staged, marker) = stageFixture(s, dir, "#s" + sentinelHorizonHours,
+      Seq("events.parquet"), sentinelHorizonHours)
+    stagedStream(s, staged, marker)
+  }
+
+  /** Stage the single-file events fixture of `dir` into a directory, as
+    * the file stream source requires (testdata is read-only): one copy
+    * per name in `copies`, plus the closing sentinel when
+    * `sentinelHorizonHours > 0`. The stage dir is keyed by the md5 of
+    * the path and `variant`: collision-proof, bounded length, and no two
+    * flavors share a dir (a stale sentinel file would leak a bogus
+    * far-future event into the plain stream). Staging is SKIPPED when
+    * the marker proves the staged copy derives from the fixture's
+    * current (size, mtime); a regenerated fixture restages.
+    *
+    * Returns the stage dir and the marker that describes its bytes —
+    * the one validated, or the one written — so per-staging metadata is
+    * keyed on what was staged, never on a second read of the fixture.
+    */
+  private[graft] def stageFixture(spark: SparkSession, dir: String,
+      variant: String, copies: Seq[String], sentinelHorizonHours: Int = 0)
+      : (java.nio.file.Path, String) = {
     val src = java.nio.file.Paths.get(dir, "events.parquet")
-    // stage dir keyed by the md5 of the full path plus the sentinel
-    // variant: collision-proof, bounded length; the sentinel and
-    // plain flavors never share a dir (a stale sentinel file would leak
-    // a bogus far-future event into the plain stream). Staging is
-    // SKIPPED when the marker proves the staged copy derives from the
-    // fixture's current (size, mtime) — a regenerated fixture restages
-    // (write changes mtime), but the every-call copy + max-ts job +
-    // sentinel-write job that used to re-run per drain (3x per benched
-    // query) are gone.
     val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "#s" + sentinelHorizonHours).getBytes("UTF-8"))
+      .digest((dir + variant).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val staged = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), s"graft-events-$key")
     java.nio.file.Files.createDirectories(staged)
-    val dst = staged.resolve("events.parquet")
-    val extra = if (sentinelHorizonHours > 0)
-      Seq(staged.resolve("zz-sentinel.parquet")) else Seq.empty
-    if (!stagedCurrent(src, staged, dst +: extra)) {
+    val required = (copies ++
+      (if (sentinelHorizonHours > 0) Seq("zz-sentinel.parquet") else Nil))
+      .map(staged.resolve)
+    val marker = stagedCurrent(src, staged, required).getOrElse {
       // Marker content captured BEFORE the copy: a fixture regenerated
       // mid-staging must leave a MISMATCHED marker (so the next call
       // restages), never a marker describing bytes we did not stage.
-      val marker = stagedMarkerContent(src)
-      java.nio.file.Files.copy(src, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val m = stagedMarkerContent(src)
+      copies.foreach(c => java.nio.file.Files.copy(src, staged.resolve(c),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING))
       if (sentinelHorizonHours > 0)
-        stageSentinel(spark, spark.read.parquet(dst.toString), staged,
-          sentinelHorizonHours)
-      writeStagedMarker(marker, staged)
+        stageSentinel(spark, spark.read.parquet(required.head.toString),
+          staged, sentinelHorizonHours)
+      writeStagedMarker(m, staged)
+      m
     }
-    val schema = stagedSchema(spark, src, staged, dst)
-    graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(staged.toString))
+    (staged, marker)
   }
 
+  private def stagedStream(spark: SparkSession, staged: java.nio.file.Path,
+      marker: String): DataFrame =
+    graft.Tables.normalizeEventTs(spark.readStream
+      .schema(stagedSchema(spark, staged, marker))
+      .parquet(staged.toString))
+
   /** Read-schema of a staged events fixture, inferred once per (JVM,
-    * staged dir, fixture (size, mtime)): every drain query re-ran
-    * `spark.read.parquet(...).schema` over the identical staged copy —
-    * a per-call listing + footer read the r18 verdict told this round
-    * to shave (item 5). The cache key embeds the SAME staleness marker
-    * the staging itself uses, so a regenerated fixture (new size/mtime)
-    * re-infers; the schema describes the stream's input, nothing any
+    * stage dir, staging marker): every drain would otherwise re-list and
+    * re-read the footer of the identical staged copy. The key is the
+    * marker [[stageFixture]] returned for these bytes, so a fixture
+    * regenerated after staging cannot attach its own marker to the old
+    * copy's schema. The schema describes the stream's input, nothing any
     * query computes.
     */
   private val stagedSchemas = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  private def stagedSchema(spark: SparkSession, src: java.nio.file.Path,
-      staged: java.nio.file.Path, dst: java.nio.file.Path)
+  private[graft] def stagedSchema(spark: SparkSession,
+      staged: java.nio.file.Path, marker: String)
       : org.apache.spark.sql.types.StructType = {
-    val key = staged.toString + "|" + stagedMarkerContent(src)
+    val key = staged.toString + "|" + marker
     val hit = stagedSchemas.get(key)
     if (hit != null) hit
     else {
       // infer OUTSIDE the map (no Spark work inside a CHM remapping
       // function); a racing duplicate inference is harmless
-      val s = spark.read.parquet(dst.toString).schema
+      val s = spark.read.parquet(staged.resolve("events.parquet").toString)
+        .schema
       stagedSchemas.putIfAbsent(key, s)
       s
     }
   }
 
-  /** True when `staged`'s marker matches the fixture's current
-    * (size, mtimeMillis) and every staged file exists. The marker is
+  /** `staged`'s marker, when it matches the fixture's current
+    * (size, mtime) and every staged file exists. The marker is
     * written AFTER staging completes, so a crash mid-staging restages.
     * Underscore prefix keeps it invisible to the stream's file listing
     * (Spark skips `_`/`.`-prefixed files, like `_SUCCESS`).
@@ -139,26 +155,24 @@ object Streaming {
     // full-precision FileTime (nanos where the fs has them, via
     // toString's ISO instant) — millis truncation let a same-size
     // regeneration within one millisecond serve the stale staged copy
-    // (r17 ADVICE low)
     java.nio.file.Files.size(src) + ":" +
       java.nio.file.Files.getLastModifiedTime(src).toString
 
   private def stagedCurrent(src: java.nio.file.Path,
       staged: java.nio.file.Path,
-      required: Seq[java.nio.file.Path]): Boolean = {
+      required: Seq[java.nio.file.Path]): Option[String] = {
     val marker = staged.resolve("_staged_marker")
-    java.nio.file.Files.exists(marker) &&
-      required.forall(java.nio.file.Files.exists(_)) &&
-      scala.util.Try(new String(java.nio.file.Files.readAllBytes(marker),
-        "UTF-8")).toOption.contains(stagedMarkerContent(src))
+    if (!required.forall(java.nio.file.Files.exists(_))) None
+    else scala.util.Try(new String(java.nio.file.Files.readAllBytes(marker),
+      "UTF-8")).toOption.filter(_ == stagedMarkerContent(src))
   }
 
   private def writeStagedMarker(content: String,
       staged: java.nio.file.Path): Unit = {
     // temp + ATOMIC_MOVE: concurrent JVMs share the tmp staging dir, and
     // a direct write interleaving another JVM's copy could expose a
-    // marker describing bytes that were never fully staged (r17 ADVICE
-    // low). Unique temp name per JVM/thread so two writers never clobber
+    // marker describing bytes that were never fully staged. Unique temp
+    // name per JVM/thread so two writers never clobber
     // each other's temp either.
     val tmp = staged.resolve(s"_staged_marker.${java.util.UUID.randomUUID()}.tmp")
     java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
@@ -221,26 +235,10 @@ object Streaming {
     * file. TEST/FIXTURE ONLY, like the base staging.
     */
   def fileEventSourceDuplicated(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = java.nio.file.Paths.get(dir, "events.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "#dup").getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val staged = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft-events-$key")
-    java.nio.file.Files.createDirectories(staged)
-    val dst1 = staged.resolve("events.parquet")
-    val dst2 = staged.resolve("events-replay.parquet")
-    if (!stagedCurrent(src, staged, Seq(dst1, dst2))) {
-      val marker = stagedMarkerContent(src) // pre-copy capture, as above
-      java.nio.file.Files.copy(src, dst1,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.copy(src, dst2,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      writeStagedMarker(marker, staged)
-    }
-    val schema = stagedSchema(spark, src, staged, dst1)
-    graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(staged.toString))
+    val s = graft.Sessions.scoped(spark, graft.Tables.NanosAsLong)
+    val (staged, marker) = stageFixture(s, dir, "#dup",
+      Seq("events.parquet", "events-replay.parquet"))
+    stagedStream(s, staged, marker)
   }
 
   /** D2: streaming dedup — exactly-one-row-per-key across micro-batches,
@@ -342,7 +340,7 @@ object Streaming {
     * exact-cents value accumulation, the final session flushed when the
     * watermark passes last-event + gap — so both share q83's oracle
     * shape. REQUIRES the RocksDB state-store provider
-    * ([[withRocksDBState]]): transformWithState refuses the default
+    * ([[RocksDBConf]]): transformWithState refuses the default
     * heap-backed store.
     */
   class SessionProcessor(gapMinutes: Int)
@@ -406,7 +404,8 @@ object Streaming {
   }
 
   /** [[statefulSessionize]]'s semantics through [[SessionProcessor]] /
-    * `transformWithState`. Run drains under [[withRocksDBState]]. */
+    * `transformWithState`. Run drains on a session scoped with
+    * [[RocksDBConf]]. */
   def twsSessionize(events: Dataset[Event],
       gapMinutes: Int = 30): Dataset[SessionOut] = {
     import org.apache.spark.sql.Encoders
@@ -897,16 +896,20 @@ object Streaming {
   }
 
   /** Drain a streaming frame through a parquet FILE sink (append mode)
-    * and read the result back — the scale-safe drain: executors write
-    * partitioned output directly, the driver never materializes a row,
-    * and state stays bounded by the watermark. Pair with a
-    * sentinel-closed source ([[fileEventSource]] with a horizon) so the
-    * final watermark emits every real window/session before the
+    * and read the result back on `readOn` — the scale-safe drain:
+    * executors write partitioned output directly, the driver never
+    * materializes a row, and state stays bounded by the watermark. Pair
+    * with a sentinel-closed source ([[fileEventSource]] with a horizon)
+    * so the final watermark emits every real window/session before the
     * AvailableNow drain stops. `outDir`/`checkpoint` are recreated fresh
     * each call: a drain is a full recomputation, not a resume.
+    *
+    * The stream runs under the conf of `streamed`'s session; passing the
+    * caller's session as `readOn` keeps the batch plans over the output
+    * under the caller's own settings.
     */
-  def drainToFile(streamed: DataFrame, outDir: String,
-      checkpoint: String): DataFrame = {
+  def drainToFile(streamed: DataFrame, outDir: String, checkpoint: String,
+      readOn: SparkSession): DataFrame = {
     rmr(outDir); rmr(checkpoint)
     val q = streamed.writeStream.format("parquet")
       .option("path", outDir)
@@ -915,7 +918,7 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    streamed.sparkSession.read.parquet(outDir)
+    readOn.read.parquet(outDir)
   }
 
   /** Recursive local-filesystem delete, shared by every drain that must
@@ -948,32 +951,16 @@ object Streaming {
   val RocksDBProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run `body` with streaming state backed by RocksDB + changelog
-    * checkpointing, restoring the previous provider after. The provider
-    * is captured when a stream STARTS, so scoping it around a drain is
-    * safe (same contract as the shuffle-partition scoping in
-    * `StreamingQueries.withDrainPartitions`); streams already running
-    * keep the provider they started with.
+  /** Streaming state backed by RocksDB with changelog checkpointing, as
+    * keys for [[graft.Sessions.scoped]]. A stream keeps the provider of
+    * the session that started it, so a drain started from a session
+    * scoped with these keys runs on RocksDB while every other stream and
+    * query of the caller keeps its own provider.
     */
-  def withRocksDBState[A](spark: SparkSession)(body: => A): A = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val chgKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevChg = spark.conf.getOption(chgKey)
-    spark.conf.set(provKey, RocksDBProvider)
-    spark.conf.set(chgKey, "true")
-    try body finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-      prevChg match {
-        case Some(v) => spark.conf.set(chgKey, v)
-        case None => spark.conf.unset(chgKey)
-      }
-    }
-  }
+  val RocksDBConf: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" -> RocksDBProvider,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
 
   /** Drain a streaming frame to an in-memory table and return the result —
     * AvailableNow semantics, used by tests and local verification.

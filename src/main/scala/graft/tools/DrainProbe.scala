@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -33,19 +33,10 @@ import scala.collection.mutable
 object DrainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = args.headOption.map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(32, maxPartitionBytes = Some("16m"),
+      extra = Seq("spark.sql.adaptive.enabled" ->
+        sys.env.getOrElse("SPARK_GRAFT_AQE", "true")))
     import spark.implicits._
 
     (1 to repeats).foreach { run =>
@@ -84,14 +75,13 @@ object DrainProbe {
         }.toDF().repartitionByRange(3, col("media_id")).write.parquet(src)
       }
       val schema = spark.read.parquet(src).schema
-      def drain(): Double = {
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set("spark.sql.adaptive.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-        try sec {
-          val q = spark.readStream.schema(schema)
+      // q93's drain session: the drains' tuning, AQE overridable
+      val drainSession = graft.Sessions.scoped(spark,
+        graft.queries.StreamingQueries.DrainConf ++
+          sys.env.get("SPARK_GRAFT_AQE").map("spark.sql.adaptive.enabled" -> _)
+          : _*)
+      def drain(): Double = sec {
+          val q = drainSession.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .writeStream
             .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -109,11 +99,6 @@ object DrainProbe {
             .start()
           q.awaitTermination()
         }._2
-        finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prev)
-          spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        }
-      }
       val drain1Sec = drain()
       val (_, repairSec) = sec {
         blobs.filter(_.media_id % 7 == 0).toDF()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query bench harness for iterating on one query's plan without
   * paying the full 94-query sweep: `runMain graft.tools.QBench q21 q26`
   * times each named query with the same session conf, warm-run, and
@@ -14,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object QBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(32, maxPartitionBytes = Some("16m"))
     val all = graft.SparkEntry.queries
     val names = args.toSeq.flatMap { a =>
       val hits = all.keys.filter(_.startsWith(a)).toSeq.sorted

@@ -26,27 +26,28 @@ class BloomFilterSpec extends SparkTestBase {
     assert(fps < 100, s"FP count $fps out of 2000 probes")
   }
 
-  test("withCapacity lifts the runtime-filter clamp and restores confs") {
+  test("build lifts the runtime-filter clamp without writing caller confs") {
     // BloomFilterAggregate silently clamps numBits at
     // spark.sql.optimizer.runtime.bloomFilter.maxNumBits. Demonstrate
-    // the clamp by lowering the conf, then show withCapacity lifts it
-    // for the scoped build and restores the caller's conf after — the
-    // mechanism q88 relies on past ~4M benchmark shingles.
+    // the clamp by lowering the conf, then show BloomFilters.build lifts
+    // it on a derived session while the caller's conf stays exactly as
+    // the caller set it — the mechanism q88 relies on past ~4M
+    // benchmark shingles.
     val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     val prev = spark.conf.getOption(bitsKey)
     try {
       spark.conf.set(bitsKey, "1024")
       val keys = (0 until 500).map(i => s"k-$i").toDF("k")
-      def build(): Int = keys
+      val clamped = keys
         .agg(BloomFilters.bloomAgg(col("k"), 500L, 65536L))
         .head().getAs[Array[Byte]](0).length
-      val clamped = build()
-      val lifted = BloomFilters.withCapacity(spark, 500L, 65536L)(build())
+      val before = spark.conf.getAll
+      val lifted = BloomFilters.build(keys, col("k"), 500L, 65536L).length
       // serialized form carries the bit array: the clamped build must be
       // far smaller than the requested 64k-bit (8 KiB) filter
       assert(clamped < 2048, s"clamp did not engage (size $clamped)")
-      assert(lifted > 8000, s"withCapacity did not lift the clamp ($lifted)")
-      // conf restored to the caller's (lowered) value, not the default
+      assert(lifted > 8000, s"build did not lift the clamp ($lifted)")
+      assert(spark.conf.getAll == before)
       assert(spark.conf.get(bitsKey) == "1024")
     } finally prev match {
       case Some(v) => spark.conf.set(bitsKey, v)

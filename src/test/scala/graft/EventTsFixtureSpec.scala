@@ -120,6 +120,34 @@ class EventTsFixtureSpec extends SparkTestBase {
     assert(second == Set(10L, 11L), s"stale staged fixture served: $second")
   }
 
+  test("staged schema is keyed by the staging marker, not a later fixture") {
+    val dir = writeFixture("marker", micros = true)
+    val s = Sessions.scoped(spark, Tables.NanosAsLong)
+    val (staged, marker) =
+      Streaming.stageFixture(s, dir, "#s0", Seq("events.parquet"))
+    // the fixture is regenerated between staging and schema inference:
+    // new size and mtime, and a wider schema
+    val stage2 = Files.createTempDirectory("graft-evfix-stage-marker2")
+    rows.toDF("event_id", "us", "user_id", "event_type", "value")
+      .withColumn("ts", timestamp_micros(col("us")))
+      .withColumn("extra", lit("x"))
+      .select("event_id", "ts", "user_id", "event_type", "value", "extra")
+      .coalesce(1).write.mode("overwrite").parquet(stage2.toString)
+    scala.util.Using.resource(Files.list(stage2)) { listing =>
+      val part = listing.filter(_.getFileName.toString.endsWith(".parquet"))
+        .findFirst().get()
+      Files.copy(part, Paths.get(dir, "events.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    // the staged copy's schema, cached under the marker of the staged bytes
+    assert(!Streaming.stagedSchema(s, staged, marker).fieldNames
+      .contains("extra"))
+    // so the next build restages and infers the regenerated fixture's
+    // schema instead of hitting the old copy's
+    assert(Streaming.fileEventSource(spark, dir).schema.fieldNames
+      .contains("extra"))
+  }
+
   for ((label, micros) <- Seq(("timestamp[us]", true), ("nanos-as-long", false))) {
     test(s"Tables.events normalizes a $label fixture") {
       assertNormalized(Tables.events(spark, writeFixture(s"b$micros", micros)))
